@@ -16,6 +16,8 @@ One-shot jobs can ignore it — executor caches die with the session.
 
 from __future__ import annotations
 
+import shutil
+
 from pyspark.sql import DataFrame
 
 #: STRONG references. r14 measurement fix: these were weakrefs, and a
@@ -30,6 +32,11 @@ from pyspark.sql import DataFrame
 #: release_all() actually release; bench.py now releases between
 #: passes so every timed pass computes from the parquet inputs.
 _TRACKED: list[DataFrame] = []
+
+#: scratch directories a returned frame reads lazily (e.g. the index
+#: files ``pq_index_query_topk`` serves from) — the builder cannot
+#: delete them, so :func:`release_all` does, after the action
+_DIRS: list[str] = []
 
 
 def track(df: DataFrame) -> DataFrame:
@@ -50,9 +57,17 @@ def register(df: DataFrame) -> DataFrame:
     return df
 
 
+def register_dir(path: str) -> str:
+    """Register a scratch directory for deletion by
+    :func:`release_all`; returns ``path``."""
+    _DIRS.append(path)
+    return path
+
+
 def release_all() -> int:
-    """Unpersist every tracked DataFrame; returns count. Dropping the
-    strong refs afterwards also lets the JVM ContextCleaner reclaim
+    """Unpersist every tracked DataFrame and delete every registered
+    directory; returns the count of DataFrames. Dropping the strong
+    refs afterwards also lets the JVM ContextCleaner reclaim
     localCheckpoint RDD blocks (their storage is RDD-level, not
     CacheManager-level, so unpersist alone does not free them)."""
     released = 0
@@ -63,4 +78,7 @@ def release_all() -> int:
         except Exception:  # session already stopped — nothing to free
             pass
     _TRACKED.clear()
+    for path in _DIRS:
+        shutil.rmtree(path, ignore_errors=True)
+    _DIRS.clear()
     return released

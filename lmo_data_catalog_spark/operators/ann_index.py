@@ -1,29 +1,42 @@
-"""Incrementally-maintained IVFADC index state.
+"""Trained-codebook PQ / IVFADC arithmetic and the persisted index.
 
 Reference status: extension surface (the reference script,
-``01_source_me.R:1-346``, has no vector-index stage). This closes the
-maintenance gap the batch ANN rows leave open: ``ann_ivfadc_trained_*``
-(queries/pipeline.py) build their cell model and codes per query,
-which is the right shape for a differential but not for a corpus that
-grows continuously — at 100 TB the index must be a PERSISTED artifact
-that new vectors join at O(batch) cost, not a per-query rebuild.
+``01_source_me.R:1-346``, has no vector-index stage).
 
-Design (the FAISS IndexIVFPQ ``add`` path, Jegou/Douze/Schmid 2011,
-public):
+This module is the ONE home of the PQ arithmetic under the committed
+codebook (``functions/pq_codebook.py``). The per-query registry rows
+(``ann_pq_trained_*``, ``ann_ivfadc_*``, ``pq_index_*`` in
+queries/pipeline.py) and :class:`PqIvfIndexState` call the same
+functions, so the persisted codes and the served answers come from
+the kernels the DuckDB oracles check:
+
+- :func:`query_lut` — the query's ADC lookup table, one left-deep
+  squared-L2 fold per (subspace, centroid), the oracle's
+  ``list_transform`` order;
+- :func:`subspace_codes` — the numpy encode: per-subspace first-min
+  argmin of left-deep squared L2 (= ``list_indexof(list_min)``);
+- :func:`spherical_cell_rank` — the query's cell ranking by the
+  exact-integer spherical score, the assignment's own arithmetic;
+- :func:`adc_top` + :func:`exact_rerank` — the shortlist cut by
+  (ADC, id) and its exact cosine re-rank against a 1-row query
+  frame (``cosine_pair``, the form ``_sql_cosine`` replays).
+
+The index closes the maintenance gap the per-query rows leave open:
+at 100 TB the index must be a PERSISTED artifact that new vectors
+join at O(batch) cost, not a per-query rebuild. Design (the FAISS
+IndexIVFPQ ``add`` path, Jegou/Douze/Schmid 2011, public):
 
 - The cell model (integer Lloyd centroid sums from
   ``operators/similarity.py::kmeans_cells_exact``) and the committed
-  PQ codebook (``functions/pq_codebook.py``) are FROZEN training
-  artifacts — encoding is a pure per-vector function of them, so
-  ingesting a corpus in any batch partitioning yields byte-identical
-  index rows (the union-of-batches invariant, pinned in
-  tests/test_ann_index.py).
-- :meth:`PqIvfIndexState.ingest` encodes ONLY the batch (one Arrow
-  mapInPandas kernel: cell assignment by the exact-integer spherical
-  score, 16 subspace codes by first-min argmin — the same argmin/
-  tie conventions as the ``_tpq_scored`` kernel) and appends it to a
-  snapshot-versioned table (sources/versioned.py::VersionedTable)
-  Hive-partitioned on ``cell``: zero shuffles, zero history reads.
+  PQ codebook are FROZEN training artifacts — encoding is a pure
+  per-vector function of them, so ingesting a corpus in any batch
+  partitioning yields byte-identical index rows (the
+  union-of-batches invariant, pinned in tests/test_ann_index.py).
+- :meth:`PqIvfIndexState.ingest` encodes ONLY the batch
+  (:func:`pq_encode_codes`, one Arrow mapInPandas kernel) and
+  appends it to a snapshot-versioned table
+  (sources/versioned.py::VersionedTable) Hive-partitioned on
+  ``cell``: zero shuffles, zero history reads.
 - :meth:`PqIvfIndexState.query` is the IVFADC search over the
   PERSISTED codes: rank cells driver-side (k bounded rows), read
   ONLY the probed ``cell=<id>`` subdirectories
@@ -41,12 +54,113 @@ from __future__ import annotations
 
 import math
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-#: number of PQ codes per vector == PQ_M of the committed codebook;
-#: imported lazily in the kernel so module import stays Spark-free.
+from ..functions.pq_codebook import CODEBOOK, PQ_M, PQ_SUB
+from .similarity import cosine_pair
+
 CODES_SCHEMA = "id long, cell int, codes array<int>"
+
+#: the committed codebook as a (PQ_M, K, PQ_SUB) array — exact
+#: doubles of its decimal literals
+_CODEBOOK_ARRAY = np.array(CODEBOOK, dtype=np.float64)
+
+
+def query_lut(q, codebook=CODEBOOK) -> list[list[float]]:
+    """ADC lookup table: ``lut[j][c]`` = squared L2 from the query's
+    subspace-j slice to centroid c of subspace j, folded left-deep in
+    Python floats — the operand order of the oracle's
+    ``list_transform`` lambda, so every entry is bit-identical across
+    engines. ``codebook[j][c]`` is a centroid of subspace j; subspaces
+    tile the query in order."""
+    q = [float(x) for x in q]
+    luts = []
+    off = 0
+    for cents in codebook:
+        row = []
+        for cvec in cents:
+            acc = None
+            for i, c in enumerate(cvec):
+                t = q[off + i] - c
+                acc = t * t if acc is None else acc + t * t
+            row.append(acc)
+        luts.append(row)
+        off += len(cents[0])
+    return luts
+
+
+def subspace_codes(X):
+    """(n, PQ_M) 0-based PQ codes of the float64 rows ``X``: per
+    subspace, the first-min argmin (= the oracle's
+    ``list_indexof(list_min)`` tie-break, shifted to 0-based) of
+    squared L2 against the committed codebook. The squared L2
+    accumulates left-deep over the subspace dims, elementwise over the
+    batch — the oracle's SQL fold order, so the doubles are identical
+    (a ``.sum(axis=2)`` happens to be sequential at SUB=4 but flips to
+    pairwise blocking on larger widths, which would move last bits
+    and could flip an argmin near-tie cross-engine)."""
+    C = _CODEBOOK_ARRAY
+    codes = np.empty((len(X), PQ_M), dtype=np.int64)
+    for j in range(PQ_M):
+        acc = None
+        for k in range(PQ_SUB):
+            t = X[:, j * PQ_SUB + k, None] - C[j, None, :, k]
+            tt = t * t
+            acc = tt if acc is None else acc + tt
+        codes[:, j] = acc.argmin(axis=1)
+    return codes
+
+
+def spherical_cell_rank(qvec, cell_sums, scale: float = 1024.0) -> list[int]:
+    """1-based cell ids by spherical score dot(quantized q, S_c)/|S_c|
+    desc, ties to the lowest id — the assignment's own score, folded
+    left-deep over k bounded driver-side rows. Every operand is an
+    exact integer in double, so this replicates the oracle's ranked
+    assignment CTE bit-for-bit."""
+    qq = [math.floor(float(x) * scale + 0.5) for x in qvec]
+    scored = []
+    for ci, svec in enumerate(cell_sums):
+        num = None
+        for qi, si in zip(qq, svec):
+            t = float(qi) * float(si)
+            num = t if num is None else num + t
+        den = None
+        for si in svec:
+            fs = float(si)
+            p = fs * fs
+            den = p if den is None else den + p
+        scored.append((num / math.sqrt(den), ci))
+    return [ci + 1 for _, ci in sorted(scored, key=lambda sc: (-sc[0], sc[1]))]
+
+
+def adc_top(scored: DataFrame, n: int, id_col: str = "vec_id") -> DataFrame:
+    """The ``n`` best rows of an ADC-scored frame by (``__adc`` asc,
+    id asc) — raw-double order with id ties, so the cut is
+    engine-exact. One TakeOrderedAndProject, no shuffle."""
+    return scored.orderBy(F.col("__adc").asc(), F.col(id_col).asc()).limit(n)
+
+
+def exact_rerank(
+    short: DataFrame,
+    qdf: DataFrame,
+    *,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """(``id_col``, ``__cos``): the exact cosine top-``k`` of the
+    vectors in ``short`` against the 1-row query frame ``qdf`` (column
+    ``qv``), by (``__cos`` desc, id asc). ``cosine_pair``'s left-deep
+    folds are the arithmetic the oracle's ``_sql_cosine`` replays, so
+    the cut is engine-exact."""
+    return (
+        short.crossJoin(F.broadcast(qdf))
+        .select(id_col, cosine_pair(vec_col, "qv", PQ_M * PQ_SUB).alias("__cos"))
+        .orderBy(F.col("__cos").desc(), F.col(id_col).asc())
+        .limit(k)
+    )
 
 
 def pq_encode_codes(
@@ -62,19 +176,13 @@ def pq_encode_codes(
     dot(quantized(v), S_c)/|S_c| over the frozen integer Lloyd state
     (every operand an exact integer in double — numpy's GEMM and the
     expression fold agree bit-for-bit, the kmeans_cells_exact
-    argument); ties to the lowest cell via first-max. Codes (0-based):
-    per-subspace first-min argmin of squared L2 against the committed
-    codebook — identical to the ``_tpq_scored`` convention, so
-    persisted codes equal the per-query kernel's."""
-    import numpy as np
-
-    from ..functions.pq_codebook import CODEBOOK, PQ_M, PQ_SUB
-
+    argument); ties to the lowest cell via first-max. Codes:
+    :func:`subspace_codes`, the same kernel the per-query ADC rows
+    score with, so persisted codes equal theirs."""
     S = np.array(
         [[int(x) for x in v] for v in cell_sums], dtype=np.float64
     )
     norms = np.sqrt((S * S).sum(axis=1))
-    C = np.array(CODEBOOK, dtype=np.float64)  # (M, K, SUB)
     scale = float(scale)
 
     def kernel(batches):
@@ -88,26 +196,11 @@ def pq_encode_codes(
             )
             Q = np.floor(X * scale + 0.5)
             cells = ((Q @ S.T) / norms).argmax(axis=1) + 1
-            codes = np.empty((len(X), PQ_M), dtype=np.int64)
-            for j in range(PQ_M):
-                Xs = X[:, j * PQ_SUB : (j + 1) * PQ_SUB]
-                # explicit left-deep accumulation over the subspace —
-                # the SAME operand order as _tpq_scored's kernel and
-                # the oracle's SQL fold (a .sum(axis=2) happens to be
-                # sequential at SUB=4 but flips to pairwise blocking
-                # on larger widths, which would move last bits and
-                # could flip an argmin near-tie cross-engine)
-                acc = None
-                for k in range(PQ_SUB):
-                    t = Xs[:, k, None] - C[j, None, :, k]
-                    tt = t * t
-                    acc = tt if acc is None else acc + tt
-                codes[:, j] = acc.argmin(axis=1)
             yield pd.DataFrame(
                 {
                     "id": pdf["id"],
                     "cell": cells.astype("int32"),
-                    "codes": list(codes),
+                    "codes": list(subspace_codes(X)),
                 }
             )
 
@@ -133,20 +226,6 @@ class PqIvfIndexState:
         self.cell_sums = [[int(x) for x in v] for v in cell_sums]
         self.scale = float(scale)
 
-    # ------------------------------------------------------------ encode
-
-    def _encode(
-        self, df: DataFrame, *, id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> DataFrame:
-        return pq_encode_codes(
-            df,
-            self.cell_sums,
-            id_col=id_col,
-            vec_col=vec_col,
-            scale=self.scale,
-        )
-
     # ------------------------------------------------------------ ingest
 
     def ingest(
@@ -168,7 +247,9 @@ class PqIvfIndexState:
         if df.limit(1).count() == 0:
             return self.table.head()
         return self.table.commit(
-            self._encode(df, id_col=id_col, vec_col=vec_col),
+            pq_encode_codes(
+                df, self.cell_sums, id_col=id_col, vec_col=vec_col, scale=self.scale
+            ),
             operation="pq-ivf-ingest",
             partition_by=["cell"],
             props=props,
@@ -216,8 +297,13 @@ class PqIvfIndexState:
             return head
         if vectors is not None:
             located = (
-                self._encode(vectors, id_col=id_col, vec_col=vec_col)
-                .join(
+                pq_encode_codes(
+                    vectors,
+                    self.cell_sums,
+                    id_col=id_col,
+                    vec_col=vec_col,
+                    scale=self.scale,
+                ).join(
                     F.broadcast(id_df),
                     F.col("id") == F.col("__del"),
                     "leftsemi",
@@ -282,7 +368,13 @@ class PqIvfIndexState:
         if vectors.limit(1).count() == 0:
             raise ValueError("rebuild needs a non-empty vector corpus")
         return self.table.commit(
-            self._encode(vectors, id_col=id_col, vec_col=vec_col),
+            pq_encode_codes(
+                vectors,
+                self.cell_sums,
+                id_col=id_col,
+                vec_col=vec_col,
+                scale=self.scale,
+            ),
             mode="overwrite",
             operation="pq-ivf-rebuild",
             partition_by=["cell"],
@@ -293,25 +385,8 @@ class PqIvfIndexState:
 
     def rank_cells(self, qvec) -> list[int]:
         """1-based cell ids by spherical score desc, ties to lowest id
-        — the same left-deep exact-integer arithmetic as assignment,
-        over k bounded driver-side rows."""
-        qq = [math.floor(float(x) * self.scale + 0.5) for x in qvec]
-        scored = []
-        for ci, svec in enumerate(self.cell_sums):
-            num = None
-            for qi, si in zip(qq, svec):
-                t = float(qi) * float(si)
-                num = t if num is None else num + t
-            den = None
-            for si in svec:
-                fs = float(si)
-                p = fs * fs
-                den = p if den is None else den + p
-            scored.append((num / math.sqrt(den), ci))
-        return [
-            ci + 1
-            for _, ci in sorted(scored, key=lambda sc: (-sc[0], sc[1]))
-        ]
+        (:func:`spherical_cell_rank` over this handle's cells)."""
+        return spherical_cell_rank(qvec, self.cell_sums, self.scale)
 
     def adc_shortlist(
         self, qvec, *, nprobe: int = 4, rerank: int = 50
@@ -320,36 +395,16 @@ class PqIvfIndexState:
         PERSISTED codes — rank cells driver-side, read ONLY the
         probed ``cell=`` subdirectories (explicit leaf-path scan, no
         partition discovery, no Exchange), ADC-score the 16-byte
-        codes against the query LUT as plain column arithmetic
+        codes against :func:`query_lut` as plain column arithmetic
         (left-deep j = 0..M-1, the encode/oracle fold order), keep
-        the ``rerank`` best by (__adc asc, id asc). Shared by
-        :meth:`query` and the ``pq_index_query_topk`` registry row,
-        so the serving path itself is differential-gated."""
-        from ..functions.pq_codebook import CODEBOOK, PQ_M, PQ_SUB
-
-        probed = self.rank_cells(qvec)[:nprobe]
-        q = [float(x) for x in qvec]
-        luts = []
-        for j in range(PQ_M):
-            lut = []
-            for cvec in CODEBOOK[j]:
-                acc = None
-                for i in range(PQ_SUB):
-                    t = q[j * PQ_SUB + i] - cvec[i]
-                    acc = t * t if acc is None else acc + t * t
-                lut.append(acc)
-            luts.append(lut)
-        codes = self.table.read_partitions("cell", probed)
+        the ``rerank`` best by (__adc asc, id asc)."""
+        codes = self.table.read_partitions("cell", self.rank_cells(qvec)[:nprobe])
         adc = None
-        for j in range(PQ_M):
-            arr = F.array(*[F.lit(v) for v in luts[j]])
+        for j, lut in enumerate(query_lut(qvec)):
+            arr = F.array(*[F.lit(v) for v in lut])
             term = F.element_at(arr, F.col("codes")[j] + 1)
             adc = term if adc is None else adc + term
-        return (
-            codes.select("id", adc.alias("__adc"))
-            .orderBy(F.col("__adc").asc(), F.col("id").asc())
-            .limit(rerank)
-        )
+        return adc_top(codes.select("id", adc.alias("__adc")), rerank, "id")
 
     def query(
         self,
@@ -362,24 +417,22 @@ class PqIvfIndexState:
         id_col: str = "vec_id",
         vec_col: str = "embedding",
     ) -> DataFrame:
-        """IVFADC search over the persisted codes: probe the query's
-        ``nprobe`` nearest cells (reading ONLY those ``cell=``
-        subdirectories), ADC-score the codes against the query LUT as
-        plain column arithmetic, exact-re-rank the top-``rerank``
-        against ``base`` (the vector table — codes never round-trip
-        through it). Returns (id, cosine) top-``k``."""
-        from .similarity import cosine_literal
-
-        q = [float(x) for x in qvec]
+        """IVFADC search over the persisted codes: :meth:`adc_shortlist`
+        (reading ONLY the probed ``cell=`` subdirectories), then
+        :func:`exact_rerank` of the top-``rerank`` against their
+        vectors in ``base`` (the vector table — codes never round-trip
+        through it; the 50-row shortlist joins in as a broadcast).
+        Returns (id, cosine) top-``k``. The ``pq_index_query_topk``
+        registry row serves through this method, so it is
+        differential-gated."""
         short = self.adc_shortlist(qvec, nprobe=nprobe, rerank=rerank)
-        return (
-            base.join(
-                F.broadcast(short), base[id_col] == short["id"], "inner"
-            )
-            .select(
-                F.col(id_col),
-                cosine_literal(vec_col, q).alias("cosine"),
-            )
-            .orderBy(F.col("cosine").desc(), F.col(id_col).asc())
-            .limit(k)
+        qdf = self.spark.createDataFrame(
+            [([float(x) for x in qvec],)], "qv array<double>"
         )
+        return exact_rerank(
+            base.join(F.broadcast(short), base[id_col] == short["id"]),
+            qdf,
+            k=k,
+            id_col=id_col,
+            vec_col=vec_col,
+        ).withColumnRenamed("__cos", "cosine")

@@ -16,7 +16,17 @@ from pyspark.sql import functions as F
 from .. import cache
 from ..catalog import Catalog
 from ..functions import epoch_us
+from ..functions.pq_codebook import CODEBOOK, PQ_M, PQ_SUB
 from ..operators import text as T
+from ..operators.ann_index import (
+    PqIvfIndexState,
+    adc_top,
+    exact_rerank,
+    pq_encode_codes,
+    query_lut,
+    spherical_cell_rank,
+    subspace_codes,
+)
 from ..operators.dedup import connected_components, minhash_lsh_dedup_pairs
 from ..operators.similarity import (
     cosine_pair,
@@ -3541,6 +3551,58 @@ def weighted_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_M, _PQ_SUB, _PQ_K = 8, 8, 4
 
 
+def _query_frame(e: DataFrame) -> DataFrame:
+    """The 1-row query frame (``qv`` = vec_id 0's vector) every exact
+    cosine re-rank broadcasts."""
+    return e.filter(F.col("vec_id") == 0).select(
+        F.col("embedding").alias("qv")
+    )
+
+
+def _query_vec(e: DataFrame) -> list[float]:
+    """vec_id 0's vector on the driver (one bounded 1-row collect)."""
+    row = e.filter(F.col("vec_id") == 0).select("embedding").collect()
+    return [float(x) for x in row[0][0]]
+
+
+def _recall_at_10(e: DataFrame, idx: DataFrame) -> DataFrame:
+    """(k, n_overlap, recall): the overlap of an index's top-10
+    ``idx`` (vec_id) with the exact cosine top-10 over the full
+    corpus — the tail every recall row shares. Both cuts are
+    engine-exact raw-double orders with vec_id ties, so the overlap
+    count is value-exact, not a tolerance match."""
+    exact = exact_rerank(e, _query_frame(e)).select("vec_id")
+    return exact.join(idx.select("vec_id"), on="vec_id").agg(
+        F.lit(10).alias("k"),
+        F.count(F.lit(1)).alias("n_overlap"),
+        (F.count(F.lit(1)) / F.lit(10.0)).alias("recall"),
+    )
+
+
+#: the oracle's query CTE: vec_id 0's vector as ``qv.q``
+_QV_SQL = "qv AS (SELECT embedding AS q FROM embeddings WHERE vec_id = 0)"
+
+
+def _recall_sql(ctes: str, idx: str = "idx10") -> str:
+    """The recall rows' shared oracle tail after ``qv`` + the index
+    CTEs ``ctes``: the exact cosine top-10, then its overlap with the
+    index's top-10 CTE ``idx`` as ``10 AS k, n_overlap, recall``."""
+    return f"""
+    WITH {_QV_SQL},
+    {ctes},
+    exact AS (
+        SELECT e.vec_id
+        FROM embeddings e CROSS JOIN qv
+        ORDER BY {_sql_cosine('e.embedding', 'qv.q')} DESC, e.vec_id
+        LIMIT 10
+    )
+    SELECT 10 AS k,
+           CAST(COUNT(*) AS BIGINT) AS n_overlap,
+           COUNT(*) / 10.0 AS recall
+    FROM exact JOIN {idx} USING (vec_id)
+    """
+
+
 def _pq_sql_d2(vec: str, cent: str, j: int) -> str:
     """Left-deep squared-L2 fold over subspace j — identical operand
     order to the Spark expression in ann_pq_adc_topk."""
@@ -3635,14 +3697,12 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle of the data). Ties break to the lowest centroid id in
     BOTH engines via the identical explicit CASE chain; the final
     order is by raw (unrounded) ADC then vec_id, so the top-10 cut
-    is engine-exact. Python computes the LUT constants with the same
-    left-deep t*t fold the SQL uses — IEEE doubles, identical
-    operand order, identical bits."""
-    return (
-        _pq_adc_scored(spark, sf_dir)
-        .orderBy(F.col("__adc").asc(), F.col("vec_id").asc())
-        .limit(10)
-        .select("vec_id", F.round("__adc", 6).alias("adc"))
+    is engine-exact. The LUT constants come from
+    operators/ann_index.py::query_lut — the same left-deep t*t fold
+    the SQL uses, IEEE doubles, identical operand order, identical
+    bits."""
+    return adc_top(_pq_adc_scored(spark, sf_dir), 10).select(
+        "vec_id", F.round("__adc", 6).alias("adc")
     )
 
 
@@ -3658,8 +3718,14 @@ def _pq_adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .collect()
     }
-    q = rows[0]
     cents = [rows[c + 1] for c in range(_PQ_K)]
+    lut = query_lut(
+        rows[0],
+        [
+            [c[j * _PQ_SUB : (j + 1) * _PQ_SUB] for c in cents]
+            for j in range(_PQ_M)
+        ],
+    )
 
     def d2_row_sql(cent: list[float], j: int) -> str:
         """(embedding[i] - cent_i)^2 summed left-deep over subspace j,
@@ -3675,16 +3741,6 @@ def _pq_adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = terms[0]
         for t in terms[1:]:
             out = f"({out} + {t})"
-        return out
-
-    def d2_const(a: list[float], b: list[float], j: int) -> float:
-        out = 0.0
-        for i in range(j * _PQ_SUB, (j + 1) * _PQ_SUB):
-            t = a[i] - b[i]
-            if i == j * _PQ_SUB:
-                out = t * t
-            else:
-                out = out + t * t
         return out
 
     # project every subspace distance ONCE (32 columns); the CASE
@@ -3706,15 +3762,14 @@ def _pq_adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def case_j(j: int) -> str:
-        lut = [d2_const(q, cents[c], j) for c in range(_PQ_K)]
         arms = []
         for c in range(_PQ_K - 1):
             cond = " AND ".join(
                 f"__d_{j}_{c} <= __d_{j}_{k}" for k in range(c + 1, _PQ_K)
             )
-            arms.append(f"WHEN {cond} THEN {lut[c]!r}D")
+            arms.append(f"WHEN {cond} THEN {lut[j][c]!r}D")
         return (
-            "CASE " + " ".join(arms) + f" ELSE {lut[_PQ_K - 1]!r}D END"
+            "CASE " + " ".join(arms) + f" ELSE {lut[j][_PQ_K - 1]!r}D END"
         )
 
     adc = " + ".join(f"({case_j(j)})" for j in range(_PQ_M))
@@ -3723,23 +3778,13 @@ def _pq_adc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_pq_recall",
-    oracle=f"""
-    WITH {_pq_sql_ctes()},
+    oracle=_recall_sql(
+        f"""{_pq_sql_ctes()},
     pq AS (
         SELECT vec_id FROM scored ORDER BY adc_raw, vec_id LIMIT 10
+    )""",
+        idx="pq",
     ),
-    qv AS (SELECT embedding AS qvec FROM embeddings WHERE vec_id = 0),
-    exact AS (
-        SELECT e.vec_id
-        FROM embeddings e CROSS JOIN qv
-        ORDER BY {_sql_cosine('e.embedding', 'qv.qvec')} DESC, e.vec_id
-        LIMIT 10
-    )
-    SELECT 10 AS k,
-           CAST(COUNT(*) AS BIGINT) AS n_overlap,
-           COUNT(*) / 10.0 AS recall
-    FROM exact JOIN pq USING (vec_id)
-    """,
     tags=("similarity", "ann", "pq", "recall"),
 )
 def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3766,27 +3811,8 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 10x10 broadcast join — at 100 TB each arm is one pass over the
     codes/vectors with a per-partition heap, and the comparison
     itself is driver-trivial."""
-    cat = Catalog(spark, sf_dir)
-    e = cat.embeddings
-    pq = (
-        _pq_adc_scored(spark, sf_dir)
-        .orderBy(F.col("__adc").asc(), F.col("vec_id").asc())
-        .limit(10)
-        .select("vec_id")
-    )
-    q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
-    exact = (
-        e.crossJoin(F.broadcast(q))
-        .select("vec_id", cosine_pair("embedding", "qv", DIM).alias("__cos"))
-        .orderBy(F.col("__cos").desc(), F.col("vec_id").asc())
-        .limit(10)
-        .select("vec_id")
-    )
-    return exact.join(pq, on="vec_id").agg(
-        F.lit(10).alias("k"),
-        F.count(F.lit(1)).alias("n_overlap"),
-        (F.count(F.lit(1)) / F.lit(10.0)).alias("recall"),
-    )
+    pq = adc_top(_pq_adc_scored(spark, sf_dir), 10)
+    return _recall_at_10(Catalog(spark, sf_dir).embeddings, pq)
 
 
 # ------------------------------------------- trained-codebook PQ index
@@ -3794,12 +3820,6 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: re-rank depth of the trained PQ index: exact cosine re-scores the
 #: ADC top-R shortlist (the FAISS IndexPQ+refine recipe)
 _TPQ_RERANK = 50
-
-
-def _tpq_geom():
-    from ..functions.pq_codebook import CODEBOOK, PQ_M, PQ_SUB
-
-    return CODEBOOK, PQ_M, PQ_SUB
 
 
 def _tpq_cb_duck(j: int) -> str:
@@ -3811,24 +3831,20 @@ def _tpq_cb_duck(j: int) -> str:
     is a syntax error) — the same pitfall _mel_sql documents; the
     trained codebook's 4-dp rounding happens to avoid it today, but
     the rendering must not depend on that coupling (r12 advisor)."""
-    cb, _, _ = _tpq_geom()
     return "[" + ", ".join(
-        "[" + ", ".join(f"({v!r})::DOUBLE" for v in c) + "]" for c in cb[j]
+        "[" + ", ".join(f"({v!r})::DOUBLE" for v in c) + "]"
+        for c in CODEBOOK[j]
     ) + "]"
 
 
-def _tpq_fold(vec_elem, c_elem, j: int) -> str:
-    """Left-deep squared-L2 fold of subspace j against the lambda
-    variable ``c``. ``vec_elem(i)`` / ``c_elem(k)`` render the
-    1-based vector / centroid element — engine-specific (Spark
-    bracket indexing is 0-based where DuckDB's is 1-based, so both
-    engines use their 1-based accessor: element_at vs []); the FOLD
-    SHAPE is engine-identical, so the doubles are too."""
-    _, _, sub = _tpq_geom()
+def _tpq_fold(vec: str, j: int) -> str:
+    """Left-deep squared-L2 fold of subspace j of the DuckDB list
+    ``vec`` (1-based) against the lambda variable ``c`` — the fold
+    shape of operators/ann_index.py's query_lut and subspace_codes,
+    so the doubles are engine-identical."""
     terms = []
-    for k in range(1, sub + 1):
-        i = j * sub + k  # 1-based full-vector index
-        t = f"({vec_elem(i)} - {c_elem(k)})"
+    for k in range(1, PQ_SUB + 1):
+        t = f"(CAST({vec}[{j * PQ_SUB + k}] AS DOUBLE) - c[{k}])"
         terms.append(f"{t} * {t}")
     out = terms[0]
     for t in terms[1:]:
@@ -3840,31 +3856,22 @@ def _tpq_sql_scored(src: str = "embeddings") -> str:
     """Oracle CTE chain ending in ``scored (vec_id, embedding,
     adc_raw)`` under the COMMITTED trained codebook (literals appear
     once, in the cb CTE). Callers must also provide ``qv``."""
-    _, m, _ = _tpq_geom()
-
-    def duck_fold(vec: str, j: int) -> str:
-        return _tpq_fold(
-            lambda i: f"CAST({vec}[{i}] AS DOUBLE)",
-            lambda k: f"c[{k}]",
-            j,
-        )
-
-    cbs = ", ".join(f"{_tpq_cb_duck(j)} AS cb_{j}" for j in range(m))
+    cbs = ", ".join(f"{_tpq_cb_duck(j)} AS cb_{j}" for j in range(PQ_M))
     luts = ", ".join(
-        f"list_transform(cb.cb_{j}, c -> {duck_fold('qv.q', j)}) AS lut_{j}"
-        for j in range(m)
+        f"list_transform(cb.cb_{j}, c -> {_tpq_fold('qv.q', j)}) AS lut_{j}"
+        for j in range(PQ_M)
     )
     das = ", ".join(
-        f"list_transform(cb.cb_{j}, c -> {duck_fold('e.embedding', j)})"
+        f"list_transform(cb.cb_{j}, c -> {_tpq_fold('e.embedding', j)})"
         f" AS da_{j}"
-        for j in range(m)
+        for j in range(PQ_M)
     )
     codes = ", ".join(
         f"list_indexof(da_{j}, list_min(da_{j})) AS code_{j}"
-        for j in range(m)
+        for j in range(PQ_M)
     )
     adc = f"luts.lut_0[code_0]"
-    for j in range(1, m):
+    for j in range(1, PQ_M):
         adc = f"({adc} + luts.lut_{j}[code_{j}])"
     return f"""cb AS (SELECT {cbs}),
     luts AS (SELECT {luts} FROM cb CROSS JOIN qv),
@@ -3879,10 +3886,13 @@ def _tpq_sql_scored(src: str = "embeddings") -> str:
     )"""
 
 
-def _tpq_sql_index_ids(src: str = "embeddings") -> str:
-    """...continuing the chain: the index's re-ranked top-10 as
-    ``idx10 (vec_id, cos_raw)``."""
-    return f"""{_tpq_sql_scored(src)},
+def _tpq_sql_index_ids(cell_ctes: str | None = None) -> str:
+    """The trained-PQ index chain over the whole corpus — or, given
+    probed-cell CTEs ending in ``cellv``, over that subset — ending
+    in its re-ranked top-10 ``idx10 (vec_id, cos_raw)``."""
+    src = "embeddings" if cell_ctes is None else "cellv"
+    cells = "" if cell_ctes is None else f"{cell_ctes},\n    "
+    return f"""{cells}{_tpq_sql_scored(src)},
     short AS (
         SELECT vec_id, embedding FROM scored
         ORDER BY adc_raw, vec_id LIMIT {_TPQ_RERANK}
@@ -3896,90 +3906,52 @@ def _tpq_sql_index_ids(src: str = "embeddings") -> str:
     )"""
 
 
-_TPQ_TOPK_SQL = f"""
-    WITH qv AS (
-        SELECT embedding AS q FROM embeddings WHERE vec_id = 0
-    ),
-    {_tpq_sql_index_ids()}
+def _topk_sql(cell_ctes: str | None = None) -> str:
+    """The top-k oracles' shared renderer: the index's top-10 with
+    6-dp cosines (see :func:`_tpq_sql_index_ids`)."""
+    return f"""
+    WITH {_QV_SQL},
+    {_tpq_sql_index_ids(cell_ctes)}
     SELECT vec_id, ROUND(cos_raw, 6) AS cosine
     FROM idx10
     ORDER BY cos_raw DESC, vec_id
-"""
+    """
 
 
-def _tpq_scored(
-    spark: SparkSession,
-    sf_dir: str,
-    frame: DataFrame | None = None,
-    q: list[float] | None = None,
-) -> DataFrame:
-    """(vec_id, embedding, __adc) under the committed trained
-    codebook — the Spark mirror of the oracle's ``scored`` CTE, run
-    as ONE Arrow mapInPandas kernel (the PQ ENCODE kernel: at 100 TB
-    this is the GEMM-class op that turns ingest vectors into 16-byte
-    codes, the same justification as the semantic-dedup/GEMM
-    kernels; a 4096-literal HOF-lambda formulation was measured ~6 s
-    per 2000 rows — interpreted expression walking, not a scale
-    path, vs <0.2 s vectorized).
+def _tpq_scored(frame: DataFrame, q: list[float]) -> DataFrame:
+    """(vec_id, embedding, __adc) of ``frame`` under the committed
+    trained codebook — the Spark mirror of the oracle's ``scored``
+    CTE, run as ONE Arrow mapInPandas kernel (the PQ ENCODE kernel:
+    at 100 TB this is the GEMM-class op that turns ingest vectors
+    into 16-byte codes, the same justification as the
+    semantic-dedup/GEMM kernels; a 4096-literal HOF-lambda
+    formulation was measured ~6 s per 2000 rows — interpreted
+    expression walking, not a scale path, vs <0.2 s vectorized).
 
     Bit-exactness vs the DuckDB lambda oracle: X casts float32 →
-    float64 (exact); per subspace the squared-L2 accumulates with
-    the SAME left-deep order as the SQL fold, elementwise over the
-    batch (IEEE doubles, identical operand order → identical bits);
-    np.argmin returns the FIRST minimum = list_indexof(list_min)'s
-    lowest-index tie-break; the LUT is computed once in Python
-    floats with the same left-deep fold the oracle's list_transform
-    uses; and the ADC total accumulates j = 0..M-1 left-deep,
-    matching the oracle's parenthesized sum."""
-    cb, m, sub = _tpq_geom()
-    cat = Catalog(spark, sf_dir)
-    e = cat.embeddings
-    if q is None:
-        # callers that already hold the query vector pass it in (r14:
-        # saves one driver-blocking collect job per invocation)
-        q = [
-            float(x)
-            for x in e.filter(F.col("vec_id") == 0)
-            .select("embedding")
-            .collect()[0][0]
-        ]
-    else:
-        q = [float(x) for x in q]
+    float64 (exact); the codes are operators/ann_index.py's
+    ``subspace_codes`` (left-deep per-subspace squared L2, first-min
+    argmin = list_indexof(list_min)); the LUT is ``query_lut`` (the
+    oracle's list_transform fold); and the ADC total accumulates
+    j = 0..M-1 left-deep, matching the oracle's parenthesized sum."""
     import numpy as np
 
-    C = np.array(cb, dtype=np.float64)  # (M, K, SUB), exact literals
-
-    def lut_j(j: int) -> list[float]:
-        out = []
-        for cvec in cb[j]:
-            acc = None
-            for k in range(sub):
-                t = q[j * sub + k] - cvec[k]
-                acc = t * t if acc is None else acc + t * t
-            out.append(acc)
-        return out
-
-    luts = np.array([lut_j(j) for j in range(m)], dtype=np.float64)
+    luts = np.array(query_lut(q), dtype=np.float64)
 
     def kernel(batches):
-        import numpy as np
         import pandas as pd
 
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
+            codes = subspace_codes(
+                np.stack(
+                    [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
+                )
             )
             adc = None
-            for j in range(m):
-                Xs = X[:, j * sub : (j + 1) * sub]
-                acc = None
-                for k in range(sub):
-                    t = Xs[:, k, None] - C[j, None, :, k]
-                    tt = t * t
-                    acc = tt if acc is None else acc + tt
-                contrib = luts[j][acc.argmin(axis=1)]
+            for j in range(len(luts)):
+                contrib = luts[j][codes[:, j]]
                 adc = contrib if adc is None else adc + contrib
             yield pd.DataFrame(
                 {
@@ -3989,37 +3961,29 @@ def _tpq_scored(
                 }
             )
 
-    src = e if frame is None else frame
-    return src.select("vec_id", "embedding").mapInPandas(
+    return frame.select("vec_id", "embedding").mapInPandas(
         kernel, schema="vec_id long, embedding array<float>, __adc double"
     )
 
 
-def _tpq_index_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, __cos): the trained-PQ index's re-ranked top-10."""
-    cat = Catalog(spark, sf_dir)
-    e = cat.embeddings
-    qdf = F.broadcast(
-        e.filter(F.col("vec_id") == 0).select(
-            F.col("embedding").alias("qv")
-        )
-    )
-    short = (
-        _tpq_scored(spark, sf_dir)
-        .orderBy(F.col("__adc").asc(), F.col("vec_id").asc())
-        .limit(_TPQ_RERANK)
-    )
-    return (
-        short.crossJoin(qdf)
-        .select("vec_id", cosine_pair("embedding", "qv", DIM).alias("__cos"))
-        .orderBy(F.col("__cos").desc(), F.col("vec_id").asc())
-        .limit(10)
-    )
+def _tpq_index_ids(e: DataFrame, frame: DataFrame, q: list[float]) -> DataFrame:
+    """(vec_id, __cos): the trained-PQ index's re-ranked top-10 over
+    ``frame`` (the corpus, or a probed-cell subset of it) — ADC scan
+    → top-50 shortlist carrying its vectors → exact re-rank against
+    the 1-row query frame."""
+    short = adc_top(_tpq_scored(frame, q), _TPQ_RERANK)
+    return exact_rerank(short, _query_frame(e))
+
+
+def _tpq_corpus_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, __cos): the trained-PQ index over the full corpus."""
+    e = Catalog(spark, sf_dir).embeddings
+    return _tpq_index_ids(e, e, _query_vec(e))
 
 
 @query(
     "ann_pq_trained_topk",
-    oracle=_TPQ_TOPK_SQL,
+    oracle=_topk_sql(),
     tags=("similarity", "ann", "pq"),
 )
 def ann_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4036,36 +4000,22 @@ def ann_pq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: ONE scan through the vectorized Arrow encode kernel
     (_tpq_scored — at 100 TB the codes are 16 bytes per vector,
-    precomputed at ingest by this exact kernel; here encode+ADC fuse
-    into the search scan) into a TakeOrdered shortlist of 50 rows
-    carrying their vectors, then the exact re-rank is trivial (50
-    rows x one broadcast query vector). Zero exchanges, zero
-    data-sized joins. Every double on both engines comes from the
-    same committed decimal literals and the same left-deep folds, so
-    the shortlist cut and the final top-10 are engine-exact."""
-    return _tpq_index_ids(spark, sf_dir).select(
+    precomputed at ingest by the same subspace_codes kernel; here
+    encode+ADC fuse into the search scan) into a TakeOrdered
+    shortlist of 50 rows carrying their vectors, then the exact
+    re-rank is trivial (50 rows x one broadcast query vector). Zero
+    exchanges, zero data-sized joins. Every double on both engines
+    comes from the same committed decimal literals and the same
+    left-deep folds, so the shortlist cut and the final top-10 are
+    engine-exact."""
+    return _tpq_corpus_ids(spark, sf_dir).select(
         "vec_id", F.round("__cos", 6).alias("cosine")
     )
 
 
 @query(
     "ann_pq_trained_recall",
-    oracle=f"""
-    WITH qv AS (
-        SELECT embedding AS q FROM embeddings WHERE vec_id = 0
-    ),
-    {_tpq_sql_index_ids()},
-    exact AS (
-        SELECT e.vec_id
-        FROM embeddings e CROSS JOIN qv
-        ORDER BY {_sql_cosine('e.embedding', 'qv.q')} DESC, e.vec_id
-        LIMIT 10
-    )
-    SELECT 10 AS k,
-           CAST(COUNT(*) AS BIGINT) AS n_overlap,
-           COUNT(*) / 10.0 AS recall
-    FROM exact JOIN idx10 USING (vec_id)
-    """,
+    oracle=_recall_sql(_tpq_sql_index_ids()),
     tags=("similarity", "ann", "pq", "recall"),
 )
 def ann_pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4076,26 +4026,8 @@ def ann_pq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     which ann_pq_recall keeps as the contrast). Value-exact overlap:
     both arms' top-10 cuts are engine-exact raw-double orders with
     vec_id ties."""
-    cat = Catalog(spark, sf_dir)
-    e = cat.embeddings
-    idx = _tpq_index_ids(spark, sf_dir).select("vec_id")
-    qdf = F.broadcast(
-        e.filter(F.col("vec_id") == 0).select(
-            F.col("embedding").alias("qv")
-        )
-    )
-    exact = (
-        e.crossJoin(qdf)
-        .select("vec_id", cosine_pair("embedding", "qv", DIM).alias("__cos"))
-        .orderBy(F.col("__cos").desc(), F.col("vec_id").asc())
-        .limit(10)
-        .select("vec_id")
-    )
-    return exact.join(idx, on="vec_id").agg(
-        F.lit(10).alias("k"),
-        F.count(F.lit(1)).alias("n_overlap"),
-        (F.count(F.lit(1)) / F.lit(10.0)).alias("recall"),
-    )
+    idx = _tpq_corpus_ids(spark, sf_dir)
+    return _recall_at_10(Catalog(spark, sf_dir).embeddings, idx)
 
 
 # ---------------------------------------------------- IVFADC (Jegou)
@@ -4136,8 +4068,6 @@ def _ivfadc_cell_ctes() -> str:
 def _ivfadc_index_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, __cos): IVFADC's re-ranked top-10 — probed-cell
     subset → PQ/ADC codes → top-50 shortlist → exact re-rank."""
-    from ..operators.similarity import cosine_to_centroids_kernel
-
     cat = Catalog(spark, sf_dir)
     e = cat.embeddings
     # bounded collect (8 centroid rows — the kmeans-state class); the
@@ -4146,18 +4076,11 @@ def _ivfadc_index_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stage that dominated this pair) with one Arrow batch kernel,
     # bit-equal by the left-deep-per-dimension numpy discipline
     # (pinned against cosine_pair in tests/test_operators.py)
-    cent_rows = sorted(
-        e.filter(F.col("vec_id").between(1, 8))
-        .select("vec_id", "embedding")
-        .collect(),
-        key=lambda r: r["vec_id"],
-    )
-    cents = [(int(r["vec_id"]), list(r["embedding"])) for r in cent_rows]
     w = Window.partitionBy("vec_id").orderBy(
         F.col("__cos").desc(), F.col("cent_id").asc()
     )
     assign = cosine_to_centroids_kernel(
-        e, cents, vec_col="embedding", keep=["vec_id"]
+        e, _collect_centroids(e), vec_col="embedding", keep=["vec_id"]
     ).withColumn("rn", F.row_number().over(w))
     assign = cache.track(assign)
     a1 = assign.filter(F.col("rn") == 1).select("vec_id", "cent_id")
@@ -4167,37 +4090,12 @@ def _ivfadc_index_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(F.col("cent_id").alias("qcent"))
     )
     cell = a1.join(qc, a1.cent_id == qc.qcent).select("vec_id")
-    e_cell = e.join(cell, on="vec_id")
-    short = (
-        _tpq_scored(spark, sf_dir, frame=e_cell)
-        .orderBy(F.col("__adc").asc(), F.col("vec_id").asc())
-        .limit(_TPQ_RERANK)
-    )
-    qdf = F.broadcast(
-        e.filter(F.col("vec_id") == 0).select(
-            F.col("embedding").alias("qv")
-        )
-    )
-    return (
-        short.crossJoin(qdf)
-        .select("vec_id", cosine_pair("embedding", "qv", DIM).alias("__cos"))
-        .orderBy(F.col("__cos").desc(), F.col("vec_id").asc())
-        .limit(10)
-    )
+    return _tpq_index_ids(e, e.join(cell, on="vec_id"), _query_vec(e))
 
 
 @query(
     "ann_ivfadc_topk",
-    oracle=f"""
-    WITH qv AS (
-        SELECT embedding AS q FROM embeddings WHERE vec_id = 0
-    ),
-    {_ivfadc_cell_ctes()},
-    {_tpq_sql_index_ids(src="cellv")}
-    SELECT vec_id, ROUND(cos_raw, 6) AS cosine
-    FROM idx10
-    ORDER BY cos_raw DESC, vec_id
-    """,
+    oracle=_topk_sql(_ivfadc_cell_ctes()),
     tags=("similarity", "ann", "ivf", "pq"),
 )
 def ann_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4225,23 +4123,7 @@ def ann_ivfadc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_ivfadc_recall",
-    oracle=f"""
-    WITH qv AS (
-        SELECT embedding AS q FROM embeddings WHERE vec_id = 0
-    ),
-    {_ivfadc_cell_ctes()},
-    {_tpq_sql_index_ids(src="cellv")},
-    exact AS (
-        SELECT e.vec_id
-        FROM embeddings e CROSS JOIN qv
-        ORDER BY {_sql_cosine('e.embedding', 'qv.q')} DESC, e.vec_id
-        LIMIT 10
-    )
-    SELECT 10 AS k,
-           CAST(COUNT(*) AS BIGINT) AS n_overlap,
-           COUNT(*) / 10.0 AS recall
-    FROM exact JOIN idx10 USING (vec_id)
-    """,
+    oracle=_recall_sql(_tpq_sql_index_ids(_ivfadc_cell_ctes())),
     tags=("similarity", "ann", "ivf", "pq", "recall"),
 )
 def ann_ivfadc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4265,26 +4147,8 @@ def ann_ivfadc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     this in-registry row exists to measure per deployment. The
     full-corpus-codes alternative (ann_pq_trained_topk) stays the
     right index for unclustered data."""
-    cat = Catalog(spark, sf_dir)
-    e = cat.embeddings
-    idx = _ivfadc_index_ids(spark, sf_dir).select("vec_id")
-    qdf = F.broadcast(
-        e.filter(F.col("vec_id") == 0).select(
-            F.col("embedding").alias("qv")
-        )
-    )
-    exact = (
-        e.crossJoin(qdf)
-        .select("vec_id", cosine_pair("embedding", "qv", DIM).alias("__cos"))
-        .orderBy(F.col("__cos").desc(), F.col("vec_id").asc())
-        .limit(10)
-        .select("vec_id")
-    )
-    return exact.join(idx, on="vec_id").agg(
-        F.lit(10).alias("k"),
-        F.count(F.lit(1)).alias("n_overlap"),
-        (F.count(F.lit(1)) / F.lit(10.0)).alias("recall"),
-    )
+    idx = _ivfadc_index_ids(spark, sf_dir)
+    return _recall_at_10(Catalog(spark, sf_dir).embeddings, idx)
 
 
 # ------------------------------------- IVFADC with a TRAINED coarse quantizer
@@ -4333,17 +4197,18 @@ def _ivfadc_trained_cell_ctes() -> str:
     )"""
 
 
-def _ivfadc_trained_index_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, __cos): trained-IVFADC's re-ranked top-10 — k-means
-    cell model → query's nprobe nearest cells → PQ/ADC codes over the
-    probed subset → top-50 shortlist → exact re-rank."""
-    import math
+#: the trained composition's top-k oracle — also the persisted
+#: index's (pq_index_query_topk serves a cache of this computation)
+_IVFADC_TRAINED_TOPK_SQL = _topk_sql(_ivfadc_trained_cell_ctes())
 
+
+def _lloyd_cells(e: DataFrame):
+    """(assigned, state): the 3-round deterministic Lloyd model over
+    k=8 cells (ann_ivf_kmeans_topk's exact machinery) that the
+    trained IVFADC rows and the persisted index share."""
     from ..operators.similarity import kmeans_cells_exact
 
-    cat = Catalog(spark, sf_dir)
-    e = cat.embeddings
-    assigned, state = kmeans_cells_exact(
+    return kmeans_cells_exact(
         e,
         id_col="vec_id",
         vec_col="embedding",
@@ -4352,69 +4217,28 @@ def _ivfadc_trained_index_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         iters=3,
         return_state=True,
     )
-    # the query's probed cells, ranked by the SAME spherical score as
-    # the assignment (dot(q, S_c)/|S_c|, left-deep, ties to lowest
-    # cell). Driver-side over k=8 state rows (bounded by construction,
-    # like _tpq_scored's 1-row query gather); every operand is an
-    # exact integer in double, so this replicates the oracle's afm
-    # rank bit-for-bit.
-    qvec = (
-        e.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    )
-    qq = [math.floor(float(x) * 1024.0 + 0.5) for x in qvec]
 
-    def spherical(svec: list[int]) -> float:
-        num = None
-        for qi, si in zip(qq, svec):
-            t = float(qi) * float(si)
-            num = t if num is None else num + t
-        den = None
-        for si in svec:
-            fs = float(si)
-            p = fs * fs
-            den = p if den is None else den + p
-        return num / math.sqrt(den)
 
-    scores = [spherical(s) for s in state]
-    probe = [
-        c + 1
-        for c in sorted(
-            range(len(state)), key=lambda c: (-scores[c], c)
-        )[:_IVFADC_T_NPROBE]
-    ]
+def _ivfadc_trained_index_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, __cos): trained-IVFADC's re-ranked top-10 — k-means
+    cell model → query's nprobe nearest cells → PQ/ADC codes over the
+    probed subset → top-50 shortlist → exact re-rank."""
+    e = Catalog(spark, sf_dir).embeddings
+    assigned, state = _lloyd_cells(e)
+    # the query's probed cells, ranked driver-side by the assignment's
+    # own spherical score over the k=8 state rows (bounded by
+    # construction, like the 1-row query gather)
+    qvec = _query_vec(e)
+    probe = spherical_cell_rank(qvec, state)[:_IVFADC_T_NPROBE]
     e_cell = assigned.filter(F.col("__cell").isin(probe)).select(
         "vec_id", "embedding"
     )
-    short = (
-        _tpq_scored(spark, sf_dir, frame=e_cell, q=qvec)
-        .orderBy(F.col("__adc").asc(), F.col("vec_id").asc())
-        .limit(_TPQ_RERANK)
-    )
-    qdf = F.broadcast(
-        e.filter(F.col("vec_id") == 0).select(
-            F.col("embedding").alias("qv")
-        )
-    )
-    return (
-        short.crossJoin(qdf)
-        .select("vec_id", cosine_pair("embedding", "qv", DIM).alias("__cos"))
-        .orderBy(F.col("__cos").desc(), F.col("vec_id").asc())
-        .limit(10)
-    )
+    return _tpq_index_ids(e, e_cell, qvec)
 
 
 @query(
     "ann_ivfadc_trained_topk",
-    oracle=f"""
-    WITH qv AS (
-        SELECT embedding AS q FROM embeddings WHERE vec_id = 0
-    ),
-    {_ivfadc_trained_cell_ctes()},
-    {_tpq_sql_index_ids(src="cellv")}
-    SELECT vec_id, ROUND(cos_raw, 6) AS cosine
-    FROM idx10
-    ORDER BY cos_raw DESC, vec_id
-    """,
+    oracle=_IVFADC_TRAINED_TOPK_SQL,
     tags=("similarity", "ann", "ivf", "pq", "kmeans"),
 )
 def ann_ivfadc_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4442,23 +4266,7 @@ def ann_ivfadc_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ann_ivfadc_trained_recall",
-    oracle=f"""
-    WITH qv AS (
-        SELECT embedding AS q FROM embeddings WHERE vec_id = 0
-    ),
-    {_ivfadc_trained_cell_ctes()},
-    {_tpq_sql_index_ids(src="cellv")},
-    exact AS (
-        SELECT e.vec_id
-        FROM embeddings e CROSS JOIN qv
-        ORDER BY {_sql_cosine('e.embedding', 'qv.q')} DESC, e.vec_id
-        LIMIT 10
-    )
-    SELECT 10 AS k,
-           CAST(COUNT(*) AS BIGINT) AS n_overlap,
-           COUNT(*) / 10.0 AS recall
-    FROM exact JOIN idx10 USING (vec_id)
-    """,
+    oracle=_recall_sql(_tpq_sql_index_ids(_ivfadc_trained_cell_ctes())),
     tags=("similarity", "ann", "ivf", "pq", "kmeans", "recall"),
 )
 def ann_ivfadc_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4474,34 +4282,14 @@ def ann_ivfadc_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     lesson stands either way: coarse-cell quality is a TRAINED
     artifact, and this row is the per-deployment measurement that
     says whether a corpus's geometry supports IVF pruning."""
-    cat = Catalog(spark, sf_dir)
-    e = cat.embeddings
-    idx = _ivfadc_trained_index_ids(spark, sf_dir).select("vec_id")
-    qdf = F.broadcast(
-        e.filter(F.col("vec_id") == 0).select(
-            F.col("embedding").alias("qv")
-        )
-    )
-    exact = (
-        e.crossJoin(qdf)
-        .select("vec_id", cosine_pair("embedding", "qv", DIM).alias("__cos"))
-        .orderBy(F.col("__cos").desc(), F.col("vec_id").asc())
-        .limit(10)
-        .select("vec_id")
-    )
-    return exact.join(idx, on="vec_id").agg(
-        F.lit(10).alias("k"),
-        F.count(F.lit(1)).alias("n_overlap"),
-        (F.count(F.lit(1)) / F.lit(10.0)).alias("recall"),
-    )
+    idx = _ivfadc_trained_index_ids(spark, sf_dir)
+    return _recall_at_10(Catalog(spark, sf_dir).embeddings, idx)
 
 
 @query(
     "pq_index_build_cells",
     oracle=f"""
-    WITH qv AS (
-        SELECT embedding AS q FROM embeddings WHERE vec_id = 0
-    ),
+    WITH {_QV_SQL},
     {_ivfadc_trained_cell_ctes()},
     {_tpq_sql_scored("embeddings")}
     SELECT a.cell,
@@ -4536,20 +4324,8 @@ def pq_index_build_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     dataflow, and it is embarrassingly parallel. The oracle replays
     the kernel as the unrolled kmeans CTEs + the PQ code CTEs (duck's
     1-based list_indexof shifted to the kernel's 0-based codes)."""
-    from ..operators.ann_index import pq_encode_codes
-    from ..operators.similarity import kmeans_cells_exact
-
-    cat = Catalog(spark, sf_dir)
-    e = cat.embeddings
-    _, state = kmeans_cells_exact(
-        e,
-        id_col="vec_id",
-        vec_col="embedding",
-        dim=DIM,
-        k=8,
-        iters=3,
-        return_state=True,
-    )
+    e = Catalog(spark, sf_dir).embeddings
+    _, state = _lloyd_cells(e)
     enc = pq_encode_codes(e, state)
     code_sum = F.expr("aggregate(codes, 0L, (a, x) -> a + x)")
     code_wsum = F.expr(
@@ -4570,34 +4346,30 @@ def pq_index_build_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "pq_index_query_topk",
-    oracle=f"""
-    WITH qv AS (
-        SELECT embedding AS q FROM embeddings WHERE vec_id = 0
-    ),
-    {_ivfadc_trained_cell_ctes()},
-    {_tpq_sql_index_ids(src="cellv")}
-    SELECT vec_id, ROUND(cos_raw, 6) AS cosine
-    FROM idx10
-    ORDER BY cos_raw DESC, vec_id
-    """,
+    oracle=_IVFADC_TRAINED_TOPK_SQL,
     tags=("similarity", "ann", "ivf", "pq", "index", "serving"),
 )
 def pq_index_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PERSISTED index's SERVING path as a differential-gated
     query (r13 verdict ask #2): train the cell model, ingest the
-    corpus into a PqIvfIndexState in TWO batches (the incremental
-    path production takes — union-of-batches invariance is what
-    makes this equal a one-shot build), then answer the query from
-    the index alone: rank cells driver-side, read ONLY the probed
-    ``cell=`` leaves (operators/ann_index.py::adc_shortlist — an
-    explicit leaf-path scan, no partition discovery, no Exchange on
-    the probe side), ADC-score the persisted 16-byte codes, and
-    exact-re-rank the shortlist against the vector table. The oracle
-    is ann_ivfadc_trained_topk's CTE chain verbatim: the index IS a
-    cache of that computation, and every stage (encode kernel, LUT
-    fold, shortlist order, cosine re-rank) reuses the pinned
-    bit-exact arithmetic, so the cached result hashes identically to
-    the recomputed one.
+    corpus into a PqIvfIndexState, then answer the query from the
+    index alone through ``PqIvfIndexState.query``: rank cells
+    driver-side, read ONLY the probed ``cell=`` leaves
+    (``adc_shortlist`` — an explicit leaf-path scan, no partition
+    discovery, no Exchange on the probe side), ADC-score the
+    persisted 16-byte codes, and ``exact_rerank`` the shortlist
+    against the vector table. The oracle is ann_ivfadc_trained_topk's
+    verbatim: the index IS a cache of that computation, and every
+    stage (encode kernel, LUT fold, shortlist order, cosine re-rank)
+    is the same function in operators/ann_index.py, so the cached
+    result hashes identically to the recomputed one.
+
+    One ``ingest`` builds the index: the union-of-batches invariance
+    an incremental build relies on is pinned in
+    tests/test_ann_index.py, not re-paid here. The index lives in a
+    temp dir registered with ``cache``, so ``cache.release_all()``
+    deletes it after the action (the returned frame reads it
+    lazily).
 
     Scale shape: this is the ONLY registry ANN row whose per-query
     cost is independent of training — the Lloyd rounds and the PQ
@@ -4607,45 +4379,15 @@ def pq_index_query_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     on EVERY call: an earlier per-process memo keyed on sf_dir let
     bench timed passes serve from an artifact the warm-up pass wrote,
     which is exactly the cross-pass-reuse class the r14 honesty fix
-    eliminated (r14 verdict item 3) — so each invocation now pays the
-    full train + two-batch ingest cost, like every other trained row."""
+    eliminated (r14 verdict item 3) — so each invocation pays the
+    full train + ingest cost, like every other trained row."""
     import tempfile
 
-    from ..operators.ann_index import PqIvfIndexState
-    from ..operators.similarity import kmeans_cells_exact
-
-    cat = Catalog(spark, sf_dir)
-    e = cat.embeddings
-    _, state = kmeans_cells_exact(
-        e,
-        id_col="vec_id",
-        vec_col="embedding",
-        dim=DIM,
-        k=8,
-        iters=3,
-        return_state=True,
-    )
-    ix = PqIvfIndexState(
-        spark, tempfile.mkdtemp(prefix="pq-ivf-serve-"), state
-    )
-    ix.ingest(e.filter(F.col("vec_id") % 2 == 0))
-    ix.ingest(e.filter(F.col("vec_id") % 2 == 1))
-    qvec = (
-        e.filter(F.col("vec_id") == 0).select("embedding").collect()[0][0]
-    )
-    short = ix.adc_shortlist(
-        qvec, nprobe=_IVFADC_T_NPROBE, rerank=_TPQ_RERANK
-    )
-    qdf = F.broadcast(
-        e.filter(F.col("vec_id") == 0).select(
-            F.col("embedding").alias("qv")
-        )
-    )
-    return (
-        e.join(F.broadcast(short), e["vec_id"] == short["id"], "inner")
-        .crossJoin(qdf)
-        .select("vec_id", cosine_pair("embedding", "qv", DIM).alias("__cos"))
-        .orderBy(F.col("__cos").desc(), F.col("vec_id").asc())
-        .limit(10)
-        .select("vec_id", F.round("__cos", 6).alias("cosine"))
-    )
+    e = Catalog(spark, sf_dir).embeddings
+    _, state = _lloyd_cells(e)
+    root = cache.register_dir(tempfile.mkdtemp(prefix="pq-ivf-serve-"))
+    ix = PqIvfIndexState(spark, root, state)
+    ix.ingest(e)
+    return ix.query(
+        _query_vec(e), e, nprobe=_IVFADC_T_NPROBE, rerank=_TPQ_RERANK
+    ).select("vec_id", F.round("cosine", 6).alias("cosine"))

@@ -8,7 +8,7 @@ Pins the three claims the operator makes:
    pure per-vector function of the frozen cell model + codebook);
 2. the probe is PHYSICALLY pruned: a query's candidate scan reads
    only the probed ``cell=<id>`` subdirectories;
-3. the persisted-index query returns the SAME top-k as the
+3. the persisted-index query returns the SAME top-k rows as the
    per-query-rebuild registry row (``ann_ivfadc_trained_topk``) at
    the same geometry — the index is a cache of that computation,
    byte-equal where it claims to be.
@@ -23,7 +23,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from lmo_data_catalog_spark.operators.ann_index import PqIvfIndexState
+from lmo_data_catalog_spark.operators.ann_index import (
+    PqIvfIndexState,
+    pq_encode_codes,
+)
 from lmo_data_catalog_spark.operators.similarity import kmeans_cells_exact
 
 SF = "/root/testdata/sf0.001"
@@ -102,10 +105,9 @@ def test_persisted_query_matches_registry_rebuild(
     spark, vectors, cell_sums, tmp_path
 ):
     """The index is a CACHE of ann_ivfadc_trained_topk's computation:
-    same trained cells, same committed codebook, same nprobe/rerank →
-    same top-10 ids (cosines compared at 1e-9: the re-rank folds the
-    query norm as one literal where the registry row uses
-    sqrt·sqrt — last-bit-different, order-identical)."""
+    same trained cells, same committed codebook, same nprobe/rerank,
+    same re-rank arithmetic → the same top-10 rows, 6-dp cosines
+    included."""
     from lmo_data_catalog_spark.registry import REGISTRY
 
     state = PqIvfIndexState(spark, str(tmp_path / "ix"), cell_sums)
@@ -115,14 +117,34 @@ def test_persisted_query_matches_registry_rebuild(
         for x in vectors.filter(F.col("vec_id") == 0)
         .collect()[0]["embedding"]
     ]
-    got = state.query(qvec, vectors, nprobe=4, rerank=50, k=10).collect()
+    got = (
+        state.query(qvec, vectors, nprobe=4, rerank=50, k=10)
+        # the registry row's own 6-dp rounding of the raw cosine
+        .select("vec_id", F.round("cosine", 6).alias("cosine"))
+        .collect()
+    )
     want = (
         REGISTRY["ann_ivfadc_trained_topk"].builder(spark, SF).collect()
     )
-    assert [r["vec_id"] for r in got] == [r["vec_id"] for r in want]
-    # the registry row rounds to 6 dp; this query returns raw cosines
-    for g, w in zip(got, want):
-        assert abs(g["cosine"] - w["cosine"]) < 5e-7
+    assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
+def test_serving_row_temp_dir_is_deleted_by_release_all(spark):
+    """pq_index_query_topk builds its index in a temp dir the returned
+    frame reads lazily; cache.release_all() after the action deletes
+    it, so repeated builder calls leave nothing behind."""
+    import glob
+    import tempfile
+
+    from lmo_data_catalog_spark import cache
+    from lmo_data_catalog_spark.registry import REGISTRY
+
+    pattern = os.path.join(tempfile.gettempdir(), "pq-ivf-serve-*")
+    before = set(glob.glob(pattern))
+    rows = REGISTRY["pq_index_query_topk"].builder(spark, SF).collect()
+    assert len(rows) == 10
+    cache.release_all()
+    assert set(glob.glob(pattern)) - before == set()
 
 
 def test_streaming_sink_equals_batch_build_and_replay_is_noop(
@@ -207,7 +229,7 @@ def test_remove_ids_equals_fresh_build_minus_deleted(
     before = state.query(qvec, vectors, nprobe=4, k=10).collect()
     doomed = [r["vec_id"] for r in before[1:4]]  # keep the self-match
 
-    enc = state._encode(vectors)
+    enc = pq_encode_codes(vectors, cell_sums)
     cell_of = {
         r["id"]: r["cell"]
         for r in enc.filter(F.col("id").isin(doomed)).collect()
@@ -286,8 +308,6 @@ def test_drift_raises_cell_occupancy_skew(spark, vectors, cell_sums):
     newest batch's max-cell occupancy share rises well before recall
     is measurable. Pins the signal's direction deterministically."""
     from pyspark.sql import functions as FF
-
-    from lmo_data_catalog_spark.operators.ann_index import pq_encode_codes
 
     def max_share(df):
         n = df.count()

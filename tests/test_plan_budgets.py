@@ -65,6 +65,13 @@ BUDGETS = {
     # ranker inputs in c3907bf (measured at add time, cache-cleared)
     "pareto_part_classes": 7,
     "customer_spend_quartiles": 3,
+    # the static-cell IVFADC pair, the last PQ/IVFADC rows without a
+    # budget (measured before the shared-PQ-arithmetic refactor,
+    # cache-cleared): the persisted kernel+window assignment prints its
+    # inner exchanges inside InMemoryTableScan, plus the probed-cell
+    # join, the 8-row centroid and 1-row query broadcasts
+    "ann_ivfadc_topk": 5,
+    "ann_ivfadc_recall": 7,
 }
 
 

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from lmo_data_catalog_spark.operators.ann_index import (  # noqa: E402
     PqIvfIndexState,
+    pq_encode_codes,
 )
 from lmo_data_catalog_spark.operators.similarity import (  # noqa: E402
     kmeans_cells_exact,
@@ -166,7 +167,7 @@ def main() -> None:
         corpus = batch if corpus is None else corpus.unionByName(batch)
         corpus = corpus.localCheckpoint()
         occ = (
-            state._encode(batch)
+            pq_encode_codes(batch, state.cell_sums, scale=state.scale)
             .groupBy("cell")
             .count()
             .agg(F.max("count").alias("mx"))
