@@ -101,7 +101,8 @@ def main() -> None:
     payload = json.dumps(full, indent=1, sort_keys=True)
     with open(os.path.join(REPO, "BENCH_FULL.json"), "w") as f:
         f.write(payload)
-    tag = cpus if str(cpus).isdigit() else "all"
+    # unset → local[*], which runs os.cpu_count() threads
+    tag = cpus if str(cpus).isdigit() else os.cpu_count()
     with open(os.path.join(REPO, f"BENCH_FULL_c{tag}.json"), "w") as f:
         f.write(payload)
 

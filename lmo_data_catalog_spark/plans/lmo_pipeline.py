@@ -81,23 +81,35 @@ class LMOInputs:
 
 
 def load_inputs(spark: SparkSession, raw_dir: str) -> LMOInputs:
-    """Ingest the four raw files (SM:87-97, :334)."""
+    """Ingest the four raw files (SM:87-97, :334) — once.
+
+    All four frames are persisted through :func:`cache.track`, so the
+    ~20 sheet and region-list jobs downstream scan an
+    ``InMemoryTableScan`` instead of each re-running ``textFile`` →
+    Python banner skip → CSV parse. The two banner CSVs are tracked
+    *before* :func:`remove_empty`, whose non-null-count job is then
+    the one that fills the cache. The caller releases them with
+    ``cache.release_all()`` after the sinks have run (one-shot jobs
+    may leave that to ``spark.stop()``)."""
     from ..sources.ingest import resolve_input
 
+    def banner_csv(name: str) -> DataFrame:
+        return remove_empty(
+            cache.track(read_csv_skip(spark, f"{raw_dir}/{name}", skip_rows=3))
+        )
+
     return LMOInputs(
-        employment=remove_empty(
-            read_csv_skip(spark, f"{raw_dir}/employment.csv", skip_rows=3)
+        employment=banner_csv("employment.csv"),
+        job_openings=banner_csv("job_openings.csv"),
+        occ_char=cache.track(
+            read_excel_ingest(
+                spark,
+                resolve_input(raw_dir, "Occupational Characteristics*"),
+                skip_rows=3,
+                na_values=("x",),
+            )
         ),
-        job_openings=remove_empty(
-            read_csv_skip(spark, f"{raw_dir}/job_openings.csv", skip_rows=3)
-        ),
-        occ_char=read_excel_ingest(
-            spark,
-            resolve_input(raw_dir, "Occupational Characteristics*"),
-            skip_rows=3,
-            na_values=("x",),
-        ),
-        clusters=read_csv_skip(spark, f"{raw_dir}/clusters.csv"),
+        clusters=cache.track(read_csv_skip(spark, f"{raw_dir}/clusters.csv")),
     )
 
 
@@ -171,6 +183,20 @@ def _finalize_headers(df: DataFrame) -> DataFrame:
     return rename_positional(title_case_names(df), 0, "NOC")
 
 
+def _pin_fan_out(df: DataFrame) -> DataFrame:
+    """Persist a small frame that many sheet jobs read, as ONE
+    partition; ``cache.release_all()`` releases it.
+
+    AQE never coalesces a cached plan, so a persisted aggregate keeps
+    every shuffle partition (32 by default) and each sheet that reads
+    it is a 32-task job over ~100 rows. Every consumer of a fan-out
+    frame is a driver collect bounded by the sink's ``max_rows`` or a
+    broadcast build side, so one partition costs no parallelism at
+    any size they accept. ``coalesce`` concatenates the partitions in
+    order, so a collect returns the rows in the aggregate's order."""
+    return cache.track(df.coalesce(1))
+
+
 def _split_by_region(
     df: DataFrame, drop: list[str]
 ) -> Workbook:
@@ -179,10 +205,10 @@ def _split_by_region(
     aggregated (small) table; each per-region sheet is a lazy filter —
     at scale this is the ``partitionBy`` write path instead.
 
-    ``df`` is persisted: the sinks materialize each sheet
-    independently, and without the cache the upstream unpivot +
-    aggregate would re-execute once per region."""
-    df = cache.track(df)
+    ``df`` is pinned (:func:`_pin_fan_out`): the sinks materialize
+    each sheet independently, and without the cache the upstream
+    unpivot + aggregate would re-execute once per region."""
+    df = _pin_fan_out(df)
     regions = [
         r[0]
         for r in df.select("Geographic Area").distinct().orderBy(
@@ -301,7 +327,9 @@ def jo_long_export(inp: LMOInputs, cfg: LMOConfig) -> DataFrame:
 
 
 def regional_jo_by_occ(inp: LMOInputs, cfg: LMOConfig) -> DataFrame:
-    """11-year total openings per NOC × region (SM:182-187)."""
+    """11-year total openings per NOC × region (SM:182-187), pinned
+    (:func:`_pin_fan_out`): every per-region HOO sheet re-executes its
+    broadcast build side otherwise, once per sheet materialization."""
     long = unpivot_years(
         inp.job_openings.filter(
             (F.col("Industry") == "All industries")
@@ -309,8 +337,10 @@ def regional_jo_by_occ(inp: LMOInputs, cfg: LMOConfig) -> DataFrame:
         ),
         ["NOC", "Description", "Industry", "Variable", "Geographic Area"],
     )
-    return long.groupBy("NOC", "Geographic Area").agg(
-        F.sum("value").alias(cfg.jo_label)
+    return _pin_fan_out(
+        long.groupBy("NOC", "Geographic Area").agg(
+            F.sum("value").alias(cfg.jo_label)
+        )
     )
 
 
@@ -328,7 +358,8 @@ def high_opportunity_occupations(
 
     A parameterized query template (SURVEY shape 2): one lazy plan per
     HOO flag column. The regional openings aggregate is computed once
-    and broadcast into every per-region left join (J1/J3) — the join's
+    (persisted as one partition by :func:`regional_jo_by_occ`) and
+    broadcast into every per-region left join (J1/J3) — the join's
     right side is |NOC| rows, far under the broadcast threshold.
     """
     occ = inp.occ_char
@@ -342,9 +373,7 @@ def high_opportunity_occupations(
         for c in hoo_cols
     }
     income = "2021 Census Median Employment Income (Employed)"
-    # persist: each of the 8 per-region sheets re-executes the
-    # broadcast build side otherwise (once per sheet materialization)
-    jo_by_region = F.broadcast(cache.track(regional_jo_by_occ(inp, cfg)))
+    jo_by_region = F.broadcast(regional_jo_by_occ(inp, cfg))
     # validate sheet→region resolution against the data: an unmatched
     # token (e.g. the vendor's year suffix drifting from cfg.fyod)
     # would otherwise left-join to nothing and silently emit an

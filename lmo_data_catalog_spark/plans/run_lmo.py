@@ -45,8 +45,6 @@ def main(argv: list[str] | None = None) -> int:
     spark.sparkContext.setLogLevel("WARN")
     cfg = LMOConfig(fyod=args.fyod)
     inputs = load_inputs(spark, args.raw_dir)
-    inputs.employment.cache()
-    inputs.job_openings.cache()
     artifacts = build_all(inputs, cfg)
     meta = {name: m for name, (_, m) in ARTIFACTS.items()}
     if args.parquet:

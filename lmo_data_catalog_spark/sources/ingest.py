@@ -10,6 +10,12 @@ formats. The engine's contract is: ingest once → typed Parquet →
 everything downstream reads Parquet through :class:`..catalog.Catalog`
 (pushdown, pruning, splittable files). These readers are the one-time
 landing step, sized for raw vendor drops, not the 100 TB hot path.
+
+The readers return lazy frames: every action on one re-runs the
+banner skip and the parse. The LMO pipeline keeps its "ingest once"
+contract in :func:`..plans.lmo_pipeline.load_inputs`, which persists
+each landed frame (``cache.track``) so that its ~20 sheet jobs share
+one read; ``cache.release_all()`` frees them.
 """
 
 from __future__ import annotations

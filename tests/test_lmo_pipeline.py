@@ -9,19 +9,26 @@ reference semantics (01_source_me.R).
 from __future__ import annotations
 
 import math
+import zipfile
 
 import pytest
 from pyspark.sql import functions as F
 
+from lmo_data_catalog_spark import cache
 from lmo_data_catalog_spark.plans import fixtures
 from lmo_data_catalog_spark.plans.lmo_pipeline import (
     ARTIFACTS,
     LMOConfig,
     build_all,
+    employment_by_industry_bc_and_regions,
+    employment_by_occupation,
     high_opportunity_occupations,
     jo_by_skill_cluster,
+    jo_by_type_and_occ,
     load_inputs,
+    regional_jo_by_occ,
 )
+from lmo_data_catalog_spark.sinks import write_catalog
 
 CFG = LMOConfig(fyod=2024)
 
@@ -35,10 +42,7 @@ def raw_dir(tmp_path_factory):
 
 @pytest.fixture(scope="module")
 def inputs(spark, raw_dir):
-    inp = load_inputs(spark, raw_dir)
-    inp.employment.cache()
-    inp.job_openings.cache()
-    return inp
+    return load_inputs(spark, raw_dir)
 
 
 @pytest.fixture(scope="module")
@@ -303,9 +307,77 @@ def test_hoo_unresolvable_sheet_region_raises(inputs):
         high_opportunity_occupations(inputs, bad_cfg)
 
 
-def test_cache_release_all_unpersists(spark):
-    from lmo_data_catalog_spark import cache
+def test_fan_out_frames_are_one_persisted_partition(inputs):
+    # a cached plan keeps every shuffle partition (AQE never coalesces
+    # it), so without the pin each region sheet is a job of
+    # spark.sql.shuffle.partitions tasks over ~100 rows
+    for builder in (
+        employment_by_industry_bc_and_regions,
+        employment_by_occupation,
+        jo_by_type_and_occ,
+    ):
+        wb = builder(inputs, CFG)
+        regions = set(wb) - {"data"}
+        assert regions, builder.__name__
+        for region in regions:
+            assert wb[region].rdd.getNumPartitions() == 1, (builder.__name__, region)
+    openings = regional_jo_by_occ(inputs, CFG)
+    assert openings.storageLevel.useMemory
+    assert openings.rdd.getNumPartitions() == 1
 
+
+def _persisted_rdds(spark) -> set[int]:
+    """Ids of the RDDs the context holds as persisted or stored."""
+    sc = spark.sparkContext._jsc
+    return set(sc.getPersistentRDDs().keys()) | {
+        info.id() for info in sc.sc().getRDDStorageInfo()
+    }
+
+
+def test_load_inputs_lands_each_frame_once(spark, raw_dir):
+    cache.release_all()
+    untracked = _persisted_rdds(spark)  # persisted by other modules' code
+    inp = load_inputs(spark, raw_dir)
+    for name in ("employment", "job_openings", "occ_char", "clusters"):
+        plan = getattr(inp, name)._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan, name
+    # remove_empty's non-null count is the job that filled the cache
+    assert _persisted_rdds(spark) - untracked
+    cache.release_all()
+    assert _persisted_rdds(spark) <= untracked
+
+
+def _worksheet_parts(out_dir) -> dict[str, bytes]:
+    parts = {}
+    for book in sorted(out_dir.glob("*.xlsx")):
+        with zipfile.ZipFile(book) as z:
+            for n in z.namelist():
+                if n.startswith("xl/worksheets/"):
+                    parts[f"{book.name}/{n}"] = z.read(n)
+    return parts
+
+
+def test_released_passes_write_identical_worksheets(spark, raw_dir, tmp_path):
+    """Two ingest → build → write passes with release_all() between
+    them: the second must recompute from its own inputs, not reuse a
+    stale cache entry, and write the same parts."""
+    meta = {name: m for name, (_, m) in ARTIFACTS.items()}
+    cache.release_all()
+    untracked = _persisted_rdds(spark)
+    parts = []
+    for i in range(2):
+        out = tmp_path / f"pass{i}"
+        write_catalog(
+            build_all(load_inputs(spark, raw_dir), CFG), str(out), metadata=meta
+        )
+        cache.release_all()
+        assert _persisted_rdds(spark) <= untracked
+        parts.append(_worksheet_parts(out))
+    assert len(parts[0]) >= len(ARTIFACTS) - 1  # 9 workbooks, >= 1 sheet each
+    assert parts[0] == parts[1]
+
+
+def test_cache_release_all_unpersists(spark):
     df = cache.track(spark.range(10))
     assert df.storageLevel.useMemory
     assert cache.release_all() >= 1

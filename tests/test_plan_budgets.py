@@ -72,11 +72,14 @@ BUDGETS = {
     # join, the 8-row centroid and 1-row query broadcasts
     "ann_ivfadc_topk": 5,
     "ann_ivfadc_recall": 7,
+    # r15's one-pass triangle contributions (measured cache-cleared):
+    # the r14 shape unioned three projections of the probe subtree, and
+    # every branch re-planned its joins and the adjacency aggregate
+    "triangle_clustering_parts": 54,
 }
 
 
-@pytest.mark.parametrize("name", sorted(BUDGETS))
-def test_exchange_count_within_budget(spark, name):
+def _executed_plan(spark, name):
     # cache-free measurement: an earlier test's cache.track'd frame
     # with a structurally identical subtree (Spark cache lookup is
     # structural) would swap an InMemoryTableScan into THIS plan and
@@ -85,12 +88,65 @@ def test_exchange_count_within_budget(spark, name):
     # association_rules_topk's persisted DISTINCT lineitem subtree
     # rewrote cooccurrence_part_pairs' plan in the full suite.
     spark.catalog.clearCache()
-    df = REGISTRY[name].builder(spark, SF)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    n = plan.count("Exchange")
+    return REGISTRY[name].builder(spark, SF)._jdf.queryExecution().executedPlan()
+
+
+@pytest.mark.parametrize("name", sorted(BUDGETS))
+def test_exchange_count_within_budget(spark, name):
+    n = _executed_plan(spark, name).toString().count("Exchange")
     assert n <= BUDGETS[name], (
         f"{name}: {n} exchanges > budget {BUDGETS[name]} — a shuffle "
         "crept in; check broadcasts/partial aggregation"
+    )
+
+
+#: iterative rows that broadcast their O(nodes) frames (r15
+#: ``broadcast_ranks``): a SortMergeJoin means some round re-shuffles
+#: the O(edges) table again
+NO_SORT_MERGE_JOIN = [
+    "pagerank_part_cooccurrence",
+    "pagerank_dangling_part_supplier",
+]
+
+
+@pytest.mark.parametrize("name", NO_SORT_MERGE_JOIN)
+def test_no_sort_merge_join(spark, name):
+    plan = _executed_plan(spark, name).toString()
+    assert "SortMergeJoin" not in plan, f"{name}: a round lost its broadcast"
+
+
+#: query -> a marker of its per-row scalar (the norm fold, the absmax,
+#: the tokenizer). r15 let-binds each inside the generator; if the
+#: scalar sits in the select beside the explode instead,
+#: CollapseProject inlines it into the post-Generate projection and it
+#: is evaluated once per EXPLODED element
+FOLDED_INTO_GENERATE = {
+    "normalize_embeddings": "aggregate(",
+    "quantize_embeddings_int8": "array_max(",
+    "chunk_documents": "split(",
+}
+
+
+def _physical_nodes(plan):
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _physical_nodes(children.apply(i))
+
+
+@pytest.mark.parametrize("name", sorted(FOLDED_INTO_GENERATE))
+def test_per_row_scalar_is_evaluated_by_the_generate(spark, name):
+    marker = FOLDED_INTO_GENERATE[name]
+    sites = [
+        node.nodeName()
+        for node in _physical_nodes(_executed_plan(spark, name))
+        if marker in node.expressions().toString()
+    ]
+    assert sites == ["Generate"], (
+        f"{name}: {marker!r} is evaluated in {sites}, not only inside the "
+        "Generate — the per-row scalar runs once per exploded element"
     )
 
 
